@@ -7,16 +7,17 @@ as a distributed batch dataflow over tables of interleaved text + media document
     corpus(doc_id STRING,
            spans ARRAY<STRUCT<kind STRING, text STRING, media_ref STRING, offset INT>>)
 
-Hot-path compute is 100% vectorized pandas/Arrow inside ``mapInArrow`` /
-``applyInPandas`` — no per-row Python anywhere in the Spark plan (the plan contains
-only ``PythonMapInArrow`` / ``FlatMapGroupsInPandas`` nodes, never ``BatchEvalPython``).
+Hot-path compute is 100% vectorized pandas/Arrow inside ``mapInArrow`` (plus one
+Arrow ``pandas_udf`` for the mega-doc classifier) — no per-row Python anywhere in
+the Spark plan (the extraction plan contains only ``MapInArrow`` /
+``ArrowEvalPython`` nodes, never ``BatchEvalPython``).
 
 Modules:
   - ``schema``        — explicit StructTypes for corpus / checkpoint / metrics tables
   - ``kernels.*``     — pure-pandas vectorized extraction kernels (unit-testable, no Spark)
   - ``extract``       — per-Arrow-batch orchestration of the kernels + sentinel totality
   - ``pipeline``      — the Spark plan: partitioning, mega-doc salting, reassembly
-  - ``checkpoint``    — checkpoint table, anti-join resume, per-partition lineage+metrics
+  - ``checkpoint``    — checkpoint table, driver-side resume, per-partition lineage+metrics
   - ``corpus``        — deterministic synthetic corpus generator (fixtures + bench slices)
   - ``job``           — spark-submit entrypoint
 """

@@ -5,8 +5,10 @@ protocol (``backend/app/main.py:94-125, 276-314`` — which has a lost-update wi
 SURVEY.md §3.2) with a structured checkpoint table + deterministic partitioning:
 
   * ``partition_id = pmod(xxhash64(doc_id), P)`` — stable, input-order-independent.
-  * resume = broadcast LEFT ANTI join of the corpus against the checkpoint rows
-    with status='completed' for this run_id (SURVEY.md §2 C1).
+  * resume = the driver collects the partition_ids with status='completed' for
+    this run_id once; pending = ``range(P)`` minus those, and the corpus is
+    filtered to the pending ids (SURVEY.md §2 C1). Every pending partition gets
+    a checkpoint row, a zero-count one if it holds no docs.
   * output written with **dynamic partition overwrite** partitioned by
     partition_id: a re-run of a half-written partition atomically replaces it —
     no duplicates, no orphans (Iceberg's overwritePartitions gives the same
@@ -30,9 +32,10 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .pipeline import DEFAULT_SALT_THRESHOLD, extract_corpus
-from .schema import CHECKPOINT_SCHEMA
+from .schema import CHECKPOINT_SCHEMA, EXTRACTED_SCHEMA
 
 DEFAULT_NUM_PARTITIONS = 64
 
@@ -71,7 +74,16 @@ def _read_table(spark: SparkSession, ref: str) -> DataFrame:
     return spark.read.parquet(ref)
 
 
-_TABLE_MISSING = ("TABLE_OR_VIEW_NOT_FOUND", "Table or view not found")
+_OUTPUT_SCHEMA = T.StructType(
+    EXTRACTED_SCHEMA.fields + [T.StructField("partition_id", T.IntegerType())]
+)
+
+
+def _is_missing(e: Exception) -> bool:
+    """True iff a read/write error only means the table or path does not exist
+    yet (a fresh run); any other error must propagate."""
+    return any(m in str(e) for m in ("PATH_NOT_FOUND", "Path does not exist",
+                                     "TABLE_OR_VIEW_NOT_FOUND", "Table or view not found"))
 
 
 def _write_output(extracted: DataFrame, ref: str) -> None:
@@ -87,7 +99,7 @@ def _write_output(extracted: DataFrame, ref: str) -> None:
         try:
             extracted.writeTo(tbl).overwritePartitions()
         except AnalysisException as e:
-            if not any(m in str(e) for m in _TABLE_MISSING):
+            if not _is_missing(e):
                 raise
             extracted.writeTo(tbl).partitionedBy(F.col("partition_id")).create()
     else:
@@ -107,7 +119,7 @@ def _append_checkpoint(rows_df: DataFrame, ref: str) -> None:
         try:
             rows_df.writeTo(tbl).append()
         except AnalysisException as e:
-            if not any(m in str(e) for m in _TABLE_MISSING):
+            if not _is_missing(e):
                 raise
             rows_df.writeTo(tbl).create()
     else:
@@ -133,27 +145,27 @@ def with_partition_id(corpus: DataFrame, num_partitions: int) -> DataFrame:
     )
 
 
-def completed_partitions(spark: SparkSession, checkpoint_path: str, run_id: str) -> DataFrame:
-    """Distinct partition_ids already completed for run_id (empty frame if the
-    checkpoint table does not exist yet). Only PATH/TABLE_NOT_FOUND means "fresh
-    run"; any other read error (corrupt footer, permission) propagates —
-    silently restarting the whole run on a corrupted checkpoint table would
-    mask it."""
+def completed_partitions(spark: SparkSession, checkpoint_path: str, run_id: str) -> set[int]:
+    """The partition_ids already completed for run_id, collected to the driver
+    (empty if the checkpoint table does not exist yet). Only a missing
+    path/table means "fresh run"; any other read error (corrupt footer,
+    permission) propagates — silently restarting the whole run on a corrupted
+    checkpoint table would mask it."""
     from pyspark.errors import AnalysisException
 
     try:
         cp = _read_table(spark, checkpoint_path)
     except AnalysisException as e:
-        s = str(e)
-        if any(m in s for m in ("PATH_NOT_FOUND", "Path does not exist",
-                                "TABLE_OR_VIEW_NOT_FOUND")):
-            return spark.createDataFrame([], "partition_id INT")
+        if _is_missing(e):
+            return set()
         raise
-    return (
+    rows = (
         cp.filter((F.col("run_id") == run_id) & (F.col("status") == "completed"))
         .select("partition_id")
         .distinct()
+        .collect()
     )
+    return {r[0] for r in rows}
 
 
 def run_extraction(
@@ -172,19 +184,21 @@ def run_extraction(
     a subset of pending partitions — used by tests to simulate a mid-run crash."""
     t0 = time.monotonic()
     _require_backend(spark, input_path, output_path, checkpoint_path)
-    corpus = with_partition_id(_read_table(spark, input_path), num_partitions)
-
     done = completed_partitions(spark, checkpoint_path, run_id)
-    pending = corpus.join(F.broadcast(done), "partition_id", "left_anti")
+    todo = [p for p in range(num_partitions) if p not in done]
     if process_only is not None:
-        pending = pending.filter(F.col("partition_id").isin([int(p) for p in process_only]))
-
-    pending_parts = [r[0] for r in pending.select("partition_id").distinct().collect()]
-    n_done_before = done.count()
+        only = {int(p) for p in process_only}
+        pending_parts = [p for p in todo if p in only]
+    else:
+        pending_parts = todo
+    n_done_before = num_partitions - len(todo)
     if not pending_parts:
         return RunSummary(run_id, num_partitions, 0, n_done_before, 0, 0, 0, 0,
                           time.monotonic() - t0)
 
+    pending = with_partition_id(_read_table(spark, input_path), num_partitions).filter(
+        F.col("partition_id").isin(pending_parts)
+    )
     extracted = extract_corpus(
         pending, salt_threshold=salt_threshold, salted_parallelism=salted_parallelism
     )
@@ -194,10 +208,12 @@ def run_extraction(
     # partitions present in this write (the pending ones)
     _write_output(extracted, output_path)
 
-    # metrics from the WRITTEN data (column-pruned scan: 4 small columns)
-    written = _read_table(spark, output_path).filter(
-        F.col("partition_id").isin(pending_parts)
-    )
+    # metrics from the WRITTEN data (column-pruned scan: 4 small columns); under
+    # its schema, a parquet output no task has written to yet reads as empty
+    written = (
+        _read_table(spark, output_path) if is_iceberg_ref(output_path)
+        else spark.read.schema(_OUTPUT_SCHEMA).parquet(output_path)
+    ).filter(F.col("partition_id").isin(pending_parts))
     agg = (
         written.groupBy("partition_id")
         .agg(

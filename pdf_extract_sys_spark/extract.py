@@ -1,8 +1,16 @@
 """Per-batch extraction orchestration: input span rows → ordered output spans.
 
 This module is the ONLY Python that runs on the hot path, invoked from
-``pipeline.py`` via ``mapInArrow`` (whole docs, zero shuffle) or ``applyInPandas``
-(salted mega-doc chunks). Everything inside is vectorized pandas over Arrow batches.
+``pipeline.py`` via ``mapInArrow`` — over whole docs (zero shuffle) and over the
+salted mega-doc chunk rows. Everything inside is vectorized pandas/numpy over
+Arrow batches.
+
+The unit of work is one Arrow batch. Its entry function gives every document an
+integer code ``doc`` (the batch row for whole docs, the factorized ``doc_id``
+for chunk rows); the kernels key on that code, and ``doc_id`` strings are
+attached only for sentinel text and the output batch. A repeated ``doc_id`` in
+one batch is therefore two documents, each extracted exactly as if it were
+alone in its batch.
 
 Routing semantics (reference: ``backend/app/main.py:171-205``):
   * a doc is *searchable* iff ANY of its pdf_chars pages has stripped text length
@@ -16,7 +24,8 @@ Sentinel totality (``main.py:361-372, 642-646, 731-735``): any doc whose payload
 fails to decode — or that hits an unexpected kernel exception (isolated by a
 per-doc fallback retry) — emits exactly one
 ``(kind='error', text='[Error processing doc <doc_id>]', media_ref=NULL, offset=0)``
-span and counts as a parse failure; the job never aborts.
+span and counts as a parse failure; the job never aborts. ``MemoryError`` is not
+a parse failure: it propagates so that Spark retries the task.
 
 Reading order (``main.py:288, 382, 389-391`` — explicit here, SURVEY.md §2 O7):
 output spans are ordered by (input span offset, within-payload sequence) and the
@@ -30,14 +39,18 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from .kernels import html as html_k
 from .kernels import ocr as ocr_k
 from .kernels import pdf_text as pdf_k
 from .kernels.util import grouped_cumsum
 from .schema import (
+    CHUNK_MARKER_OFF,
+    CHUNK_OUT_ARROW,
     EXTRACTED_ARROW,
     INPUT_KINDS,
+    KIND_CHUNK_MARKER,
     KIND_ERROR,
     KIND_HTML,
     KIND_MEDIA,
@@ -50,357 +63,222 @@ from .schema import (
 
 SEARCHABLE_THRESHOLD = 50  # main.py:64
 
-_OUT_COLS = ["doc_id", "out_offset", "kind", "text", "media_ref"]
+_PAYLOAD_KINDS = [KIND_PDF_CHARS, KIND_OCR_WORDS, KIND_HTML]  # need text
+_REF_KINDS = [KIND_MEDIA, KIND_NEEDS_OCR]  # need media_ref
 
 
-def _empty_out() -> pd.DataFrame:
+def _pages(rows: pd.DataFrame) -> pd.DataFrame:
+    """Kernel input frame: one row per payload span, keyed by the doc code."""
     return pd.DataFrame(
         {
-            "doc_id": pd.Series(dtype=object),
-            "out_offset": pd.Series(dtype=np.int32),
-            "kind": pd.Series(dtype=object),
-            "text": pd.Series(dtype=object),
-            "media_ref": pd.Series(dtype=object),
+            "doc_id": rows["doc"].to_numpy(np.int64),
+            "page": rows["offset"].to_numpy(np.int64),
+            "pos": rows["pos"].to_numpy(np.int64),
+            "payload": rows["text"].to_numpy(dtype=object),
         }
     )
 
 
+def _part(doc, in_off, pos, seq, kind, text, media_ref) -> pd.DataFrame:
+    """Output span rows keyed (doc, in_off, pos, seq); scalars broadcast."""
+    cols = dict(doc=doc, in_off=in_off, pos=pos, seq=seq, kind=kind, text=text,
+                media_ref=media_ref)
+    return pd.DataFrame(
+        {k: v.to_numpy() if isinstance(v, pd.Series) else v for k, v in cols.items()}
+    )
+
+
+def _sentinels(codes: np.ndarray, doc_ids: np.ndarray) -> pd.DataFrame:
+    """The doc-level error span for each failed doc code; in_off = -1 marks it
+    as a doc sentinel for the salted reassembly."""
+    text = "[Error processing doc " + pd.Series(doc_ids[codes], dtype=object) + "]"
+    return _part(codes, -1, -1, 0, KIND_ERROR, text, None)
+
+
+def _seal(
+    allp: pd.DataFrame, failed: np.ndarray, bytes_in: np.ndarray, enumerate_offsets: bool
+) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """Sort rows into reading order (doc, in_off, pos, seq) and return
+    (out, metrics); metrics rows are aligned with the doc codes."""
+    doc = allp["doc"].to_numpy(np.int64)
+    order = np.lexsort(
+        (allp["seq"].to_numpy(), allp["pos"].to_numpy(), allp["in_off"].to_numpy(), doc)
+    )
+    out = allp.iloc[order].reset_index(drop=True)
+    doc = doc[order]
+    metrics = pd.DataFrame(
+        {
+            "n_spans": np.bincount(doc, minlength=len(failed)).astype(np.int64),
+            "parse_failed": failed,
+            "bytes_in": bytes_in,
+        }
+    )
+    if not enumerate_offsets:
+        return out[["doc", "in_off", "pos", "seq", "kind", "text", "media_ref"]], metrics
+    out["out_offset"] = (grouped_cumsum(np.ones(len(doc), np.int64), doc) - 1).astype(np.int32)
+    return out[["doc", "out_offset", "kind", "text", "media_ref"]], metrics
+
+
 def extract_docs(
     span_rows: pd.DataFrame,
-    all_doc_ids: np.ndarray,
+    doc_ids: np.ndarray,
     *,
     enumerate_offsets: bool = True,
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
     """Core vectorized extraction over exploded input spans.
 
-    span_rows: columns (doc_id, kind, text, media_ref, offset) — one row per input
-    span — plus optionally:
-      * ``pos``   — the span's index within the doc's input array (deterministic
-        tie-break for duplicate offsets; defaults to the row order per doc)
-      * ``route`` — doc-level routing override for the salted mega-doc path
-        ('text' | 'ocr' | None): a chunk cannot see the sibling pages that decide
-        the searchable classifier, so the pipeline pre-computes it (SURVEY.md §2 S5)
-    all_doc_ids: every doc in the batch (docs with zero input spans included).
-    With enumerate_offsets=False, returns rows keyed (doc_id, in_off, pos, seq)
-    WITHOUT final per-doc offset enumeration (sentinels get in_off=-1) — the salted
-    path enumerates after reassembling all chunks of a doc.
-    Returns (out_spans, metrics[doc_id, n_spans, parse_failed, bytes_in]).
+    span_rows: one row per input span with columns
+      * ``doc``        — int64 doc code, an index into ``doc_ids``
+      * ``kind``, ``text``, ``media_ref``, ``offset`` — the input span
+      * ``pos``        — the span's index within the doc's input array
+        (deterministic tie-break for duplicate offsets)
+      * ``text_bytes`` — utf-8 byte length of ``text`` (0 for NULL)
+      * optionally ``route`` — doc-level routing override for the salted
+        mega-doc path ('text' | 'ocr' | None): a chunk cannot see the sibling
+        pages that decide the searchable classifier, so the pipeline
+        pre-computes it (SURVEY.md §2 S5)
+    doc_ids: the doc_id of every doc code (docs with zero input spans included).
+
+    Returns (out, metrics). ``out`` is sorted by (doc, reading order) with
+    columns (doc, out_offset, kind, text, media_ref); with
+    enumerate_offsets=False it keeps the sort key (doc, in_off, pos, seq)
+    instead of out_offset (sentinels get in_off=-1) — the salted path
+    enumerates after reassembling all chunks of a doc. ``metrics`` has one row
+    per doc code: (n_spans, parse_failed, bytes_in).
     May raise — callers go through :func:`extract_docs_safe`.
     """
-    sr = span_rows.reset_index(drop=True)
-    if "pos" not in sr.columns:
-        sr["pos"] = sr.groupby("doc_id", sort=False).cumcount()
-    # lineage metric: bytes of input payload text per doc (utf-8). The Arrow layer
-    # provides byte lengths zero-copy (`text_bytes`); the pandas path re-encodes.
-    if "text_bytes" in sr.columns:
-        tb = sr["text_bytes"].astype(np.int64)
-    else:
-        tb = (
-            sr["text"].str.encode("utf-8").str.len()
-            .astype("float64").fillna(0).astype(np.int64)
-        )
-    bytes_in = (
-        pd.DataFrame({"doc_id": sr["doc_id"], "b": tb})
-        .groupby("doc_id", sort=False)["b"]
-        .sum()
-    )
+    sr = span_rows
+    ndocs = len(doc_ids)
+    doc = sr["doc"].to_numpy(np.int64)
+    # lineage metric: bytes of input payload text per doc (utf-8)
+    bytes_in = np.bincount(
+        doc, weights=sr["text_bytes"].to_numpy(np.float64), minlength=ndocs
+    ).astype(np.int64)
 
-    failed: set = set()
-    kind = sr["kind"].astype(object)
-    known = kind.isin(INPUT_KINDS).to_numpy()
-    failed.update(sr.loc[~known, "doc_id"].unique())
-    needs_text = kind.isin([KIND_PDF_CHARS, KIND_OCR_WORDS, KIND_HTML]).to_numpy()
-    failed.update(sr.loc[needs_text & sr["text"].isna().to_numpy(), "doc_id"].unique())
-    failed.update(
-        sr.loc[
-            kind.isin([KIND_MEDIA, KIND_NEEDS_OCR]).to_numpy()
-            & sr["media_ref"].isna().to_numpy(),
-            "doc_id",
-        ].unique()
-    )
+    kind = sr["kind"]
+    bad = (
+        ~kind.isin(INPUT_KINDS)
+        | (kind.isin(_PAYLOAD_KINDS) & sr["text"].isna())
+        | (kind.isin(_REF_KINDS) & sr["media_ref"].isna())
+    ).to_numpy()
+    failed = np.zeros(ndocs, dtype=bool)
+    failed[doc[bad]] = True
 
     def ok_rows(k: str) -> pd.DataFrame:
-        m = (kind == k).to_numpy() & ~sr["doc_id"].isin(failed).to_numpy()
-        return sr.loc[m]
-
-    def attach_pos(spans: pd.DataFrame, pages: pd.DataFrame) -> pd.DataFrame:
-        """Carry the input-array position onto kernel outputs (tie-break key)."""
-        key = pages.drop_duplicates(["doc_id", "page"])[["doc_id", "page", "pos"]]
-        return spans.merge(key, on=["doc_id", "page"], how="left")
+        return sr.loc[(kind == k).to_numpy() & ~failed[doc]]
 
     # --- pdf_chars: decode + searchable classification (numpy core) -------------
-    pdf_rows = ok_rows(KIND_PDF_CHARS)
-    pdf_pages = pdf_rows.rename(columns={"offset": "page", "text": "payload"})[
-        ["doc_id", "page", "pos", "payload"]
-    ]
-    pdf_ev, bad_pdf = pdf_k.decode_pdf_core(pdf_pages)
-    failed.update(bad_pdf)  # decode already dropped bad docs' events
+    pdf_ev, bad_pdf = pdf_k.decode_pdf_core(_pages(ok_rows(KIND_PDF_CHARS)))
+    failed[np.asarray(bad_pdf, dtype=np.int64)] = True  # their events are dropped
 
     plens = pdf_k.page_stripped_lengths_core(pdf_ev)
-    tab_docs = pdf_ev.page_tab["doc_id"].to_numpy()
-    searchable_docs = set(tab_docs[plens > SEARCHABLE_THRESHOLD])
+    tab_docs = pdf_ev.page_tab["doc_id"].to_numpy(np.int64)
+    searchable = np.zeros(ndocs, dtype=bool)
+    searchable[tab_docs[plens > SEARCHABLE_THRESHOLD]] = True
     # mega-doc chunk path: the pipeline pre-computed doc-level routing (a chunk
     # cannot see sibling pages) — apply the override
     if "route" in sr.columns:
-        rt = sr.dropna(subset=["route"]).drop_duplicates("doc_id")
-        searchable_docs |= set(rt.loc[rt["route"] == "text", "doc_id"])
-        searchable_docs -= set(rt.loc[rt["route"] == "ocr", "doc_id"])
+        rt = sr.dropna(subset=["route"]).drop_duplicates("doc")
+        rdoc = rt["doc"].to_numpy(np.int64)
+        route = rt["route"].to_numpy()
+        searchable[rdoc[route == "text"]] = True
+        searchable[rdoc[route == "ocr"]] = False
 
-    page_sel = pdf_ev.page_tab["doc_id"].isin(searchable_docs).to_numpy()
-    pdf_spans = pdf_k.segment_sentences_core(pdf_ev.select_pages(page_sel))
+    pdf_spans = pdf_k.segment_sentences_core(pdf_ev.select_pages(searchable[tab_docs]))
 
     # --- ocr_words: only for docs NOT routed to the native-text path -----------
-    # calls the pyarrow/numpy cores directly (the pandas compat wrappers exist for
-    # tests only): no object-dtype round-trip, and page identity stays PER INPUT
-    # SPAN (two ocr_words spans sharing one offset keep distinct page_tab rows,
-    # matching the oracle's per-span treatment — the wrapper's re-factorize on
-    # (doc_id, page) would merge them)
+    # page identity stays PER INPUT SPAN: two ocr_words spans sharing one offset
+    # keep distinct page_tab rows, matching the oracle's per-span treatment
     ocr_rows = ok_rows(KIND_OCR_WORDS)
-    ocr_rows = ocr_rows.loc[~ocr_rows["doc_id"].isin(searchable_docs)]
-    ocr_pages = ocr_rows.rename(columns={"offset": "page", "text": "payload"})[
-        ["doc_id", "page", "pos", "payload"]
-    ]
-    ocr_ev, bad_ocr = ocr_k.decode_ocr_core(ocr_pages)
-    failed.update(bad_ocr)  # core already dropped bad docs' events
+    ocr_rows = ocr_rows.loc[~searchable[ocr_rows["doc"].to_numpy(np.int64)]]
+    ocr_ev, bad_ocr = ocr_k.decode_ocr_core(_pages(ocr_rows))
+    failed[np.asarray(bad_ocr, dtype=np.int64)] = True  # their events are dropped
     ocr_spans = ocr_k.group_ocr_lines_core(ocr_ev)
 
-    # --- html -------------------------------------------------------------------
-    html_rows = ok_rows(KIND_HTML)
-    html_docs = html_rows.rename(columns={"offset": "page", "text": "payload"})[
-        ["doc_id", "page", "payload", "pos"]
-    ]
-    html_spans = html_k.extract_html_spans(html_docs[["doc_id", "page", "payload"]])
-    html_spans = attach_pos(html_spans, html_docs)
+    # --- html: the input-array position is carried onto the kernel output -------
+    html_pages = _pages(ok_rows(KIND_HTML))
+    html_spans = html_k.extract_html_spans(html_pages[["doc_id", "page", "payload"]])
+    html_spans = html_spans.astype({"doc_id": np.int64}).merge(
+        html_pages.drop_duplicates(["doc_id", "page"])[["doc_id", "page", "pos"]],
+        on=["doc_id", "page"],
+        how="left",
+    )
 
-    # --- media passthrough (FIXTURES.md kind #4 / F17) ---------------------------
-    media_rows = ok_rows(KIND_MEDIA)
-
-    # --- needs_ocr passthrough (r3 VERDICT #6): image-only PDF pages surface
-    # as an explicit OCR work-list row instead of silently zero spans;
-    # independent of the searchable classifier (like media/html) -----------------
-    ocr_todo_rows = ok_rows(KIND_NEEDS_OCR)
-
-    # --- page_error passthrough (r4 VERDICT #3): a page-scoped decode failure
-    # becomes the reference's '[Error processing page N]' span (main.py:361-372)
-    # — the doc's other pages keep extracting; only doc-level failures sentinel
-    page_err_rows = ok_rows(KIND_PAGE_ERROR)
+    # --- passthroughs, independent of the searchable classifier ------------------
+    # media (FIXTURES.md kind #4 / F17); needs_ocr (r3 VERDICT #6): image-only PDF
+    # pages surface as an explicit OCR work-list row instead of silently zero
+    # spans; page_error (r4 VERDICT #3): a page-scoped decode failure becomes the
+    # reference's '[Error processing page N]' span (main.py:361-372, 0-based
+    # page index) — the doc's other pages keep extracting
+    media = ok_rows(KIND_MEDIA)
+    todo = ok_rows(KIND_NEEDS_OCR)
+    perr = ok_rows(KIND_PAGE_ERROR)
 
     # --- assemble reading order ---------------------------------------------------
-    parts = []
-    if len(pdf_spans):
-        parts.append(
-            pd.DataFrame(
-                {
-                    "doc_id": pdf_spans["doc_id"],
-                    "in_off": pdf_spans["page"].astype(np.int64),
-                    "pos": pdf_spans["pos"].astype(np.int64),
-                    "seq": pdf_spans["seq"],
-                    "kind": KIND_TEXT,
-                    "text": pdf_spans["text"],
-                    "media_ref": None,
-                }
-            )
+    parts = [
+        p for p in (
+            _part(pdf_spans["doc_id"], pdf_spans["page"], pdf_spans["pos"],
+                  pdf_spans["seq"], KIND_TEXT, pdf_spans["text"], None),
+            _part(ocr_spans["doc_id"], ocr_spans["page"], ocr_spans["pos"],
+                  ocr_spans["seq"], KIND_TEXT, ocr_spans["text"], None),
+            _part(html_spans["doc_id"], html_spans["page"], html_spans["pos"],
+                  html_spans["seq"], html_spans["kind"], html_spans["text"],
+                  html_spans["media_ref"]),
+            _part(media["doc"], media["offset"], media["pos"], 0, KIND_MEDIA,
+                  media["text"], media["media_ref"]),
+            _part(todo["doc"], todo["offset"], todo["pos"], 0, KIND_NEEDS_OCR,
+                  None, todo["media_ref"]),
+            _part(perr["doc"], perr["offset"], perr["pos"], 0, KIND_ERROR,
+                  "[Error processing page " + perr["offset"].astype(str) + "]",
+                  perr["media_ref"]),
         )
-    if len(ocr_spans):
-        parts.append(
-            pd.DataFrame(
-                {
-                    "doc_id": ocr_spans["doc_id"],
-                    "in_off": ocr_spans["page"].astype(np.int64),
-                    "pos": ocr_spans["pos"].astype(np.int64),
-                    "seq": ocr_spans["seq"],
-                    "kind": KIND_TEXT,
-                    "text": ocr_spans["text"],
-                    "media_ref": None,
-                }
-            )
-        )
-    if len(html_spans):
-        parts.append(
-            pd.DataFrame(
-                {
-                    "doc_id": html_spans["doc_id"],
-                    "in_off": html_spans["page"].astype(np.int64),
-                    "pos": html_spans["pos"].astype(np.int64),
-                    "seq": html_spans["seq"],
-                    "kind": html_spans["kind"],
-                    "text": html_spans["text"],
-                    "media_ref": html_spans["media_ref"],
-                }
-            )
-        )
-    if len(media_rows):
-        parts.append(
-            pd.DataFrame(
-                {
-                    "doc_id": media_rows["doc_id"],
-                    "in_off": media_rows["offset"].astype(np.int64),
-                    "pos": media_rows["pos"].astype(np.int64),
-                    "seq": 0,
-                    "kind": KIND_MEDIA,
-                    "text": media_rows["text"],
-                    "media_ref": media_rows["media_ref"],
-                }
-            )
-        )
-    if len(ocr_todo_rows):
-        parts.append(
-            pd.DataFrame(
-                {
-                    "doc_id": ocr_todo_rows["doc_id"],
-                    "in_off": ocr_todo_rows["offset"].astype(np.int64),
-                    "pos": ocr_todo_rows["pos"].astype(np.int64),
-                    "seq": 0,
-                    "kind": KIND_NEEDS_OCR,
-                    "text": None,
-                    "media_ref": ocr_todo_rows["media_ref"],
-                }
-            )
-        )
-    if len(page_err_rows):
-        parts.append(
-            pd.DataFrame(
-                {
-                    "doc_id": page_err_rows["doc_id"],
-                    "in_off": page_err_rows["offset"].astype(np.int64),
-                    "pos": page_err_rows["pos"].astype(np.int64),
-                    "seq": 0,
-                    "kind": KIND_ERROR,
-                    # reference format, 0-based page index (main.py:59,369)
-                    "text": "[Error processing page "
-                    + page_err_rows["offset"].astype(np.int64).astype(str)
-                    + "]",
-                    "media_ref": page_err_rows["media_ref"],
-                }
-            )
-        )
-
-    if parts:
-        allp = pd.concat(parts, ignore_index=True)
-        allp = allp.loc[~allp["doc_id"].isin(failed)]
-        idx = pd.Index(pd.Series(all_doc_ids, dtype=object))
-        codes = (
-            idx.get_indexer(allp["doc_id"].to_numpy(dtype=object))
-            if idx.is_unique
-            else None
-        )
-        # -1 codes (span doc_ids outside all_doc_ids — impossible from the
-        # internal callers, but this is a public function) would collapse
-        # into ONE group; keep the exact per-doc_id numbering path for them
-        if codes is not None and (len(codes) == 0 or codes.min() >= 0):
-            # out_offset only needs per-doc grouping + within-doc
-            # (in_off, pos, seq) order, so an integer doc code replaces the
-            # object-string sort key — value-identical, no string compares
-            order = np.lexsort(
-                (
-                    allp["seq"].to_numpy(),
-                    allp["pos"].to_numpy(),
-                    allp["in_off"].to_numpy(),
-                    codes,
-                )
-            )
-            allp = allp.iloc[order].reset_index(drop=True)
-            allp["out_offset"] = (
-                grouped_cumsum(np.ones(len(allp), np.int64), codes[order]) - 1
-            ).astype(np.int32)
-        else:
-            allp = allp.sort_values(
-                ["doc_id", "in_off", "pos", "seq"], kind="stable"
-            ).reset_index(drop=True)
-            allp["out_offset"] = (
-                allp.groupby("doc_id", sort=False).cumcount().astype(np.int32)
-            )
-    else:
-        allp = _empty_out().assign(in_off=np.int64(0), pos=np.int64(0), seq=np.int64(0))
-
-    # --- error sentinels ----------------------------------------------------------
-    if failed:
-        fids = pd.Series(sorted(failed), dtype=object)
-        sent = pd.DataFrame(
-            {
-                "doc_id": fids,
-                "in_off": np.int64(-1),
-                "pos": np.int64(-1),
-                "seq": np.int64(0),
-                "out_offset": np.int32(0),
-                "kind": KIND_ERROR,
-                "text": "[Error processing doc " + fids + "]",
-                "media_ref": None,
-            }
-        )
-        allp = pd.concat([allp, sent], ignore_index=True)
-
-    if enumerate_offsets:
-        out = allp[["doc_id", "out_offset", "kind", "text", "media_ref"]]
-    else:
-        out = allp[["doc_id", "in_off", "pos", "seq", "kind", "text", "media_ref"]]
-
-    # --- per-doc metrics ------------------------------------------------------------
-    ids = pd.Series(all_doc_ids, dtype=object)
-    nsp = out.groupby("doc_id", sort=False).size()
-    metrics = pd.DataFrame(
-        {
-            "doc_id": ids,
-            "n_spans": nsp.reindex(ids).fillna(0).astype(np.int64).to_numpy(),
-            "parse_failed": ids.isin(failed).to_numpy(),
-            "bytes_in": bytes_in.reindex(ids).fillna(0).astype(np.int64).to_numpy(),
-        }
+        if len(p)
+    ]
+    allp = pd.concat(parts, ignore_index=True) if parts else _part(
+        np.empty(0, np.int64), 0, 0, 0, KIND_TEXT, None, None
     )
-    return out, metrics
+    allp = allp.loc[~failed[allp["doc"].to_numpy(np.int64)]]
+    if failed.any():
+        allp = pd.concat([allp, _sentinels(np.flatnonzero(failed), doc_ids)], ignore_index=True)
+    return _seal(allp, failed, bytes_in, enumerate_offsets)
 
 
 def extract_docs_safe(
     span_rows: pd.DataFrame,
-    all_doc_ids: np.ndarray,
+    doc_ids: np.ndarray,
     *,
     enumerate_offsets: bool = True,
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
-    """Sentinel-totality wrapper: on an unexpected kernel exception, retry per doc to
-    isolate the poison docs (cold path) — the batch never fails (main.py:361-372)."""
+    """Sentinel-totality wrapper over :func:`extract_docs` (same contract): if a
+    kernel raises on the batch, the docs are re-run one at a time — the rows
+    are split by doc code once, O(rows) — so only the poison docs become
+    sentinels and the batch never fails (main.py:361-372). ``MemoryError``
+    is an infrastructure failure, not a parse failure: it propagates so that
+    Spark retries the task."""
     try:
-        return extract_docs(span_rows, all_doc_ids, enumerate_offsets=enumerate_offsets)
+        return extract_docs(span_rows, doc_ids, enumerate_offsets=enumerate_offsets)
+    except MemoryError:
+        raise
     except Exception:
-        outs, mets = [], []
-        for did in all_doc_ids:
-            rows = span_rows.loc[span_rows["doc_id"] == did]
-            try:
-                o, m = extract_docs(
-                    rows, np.array([did], dtype=object), enumerate_offsets=enumerate_offsets
-                )
-            except Exception:
-                o = pd.DataFrame(
-                    {
-                        "doc_id": [did],
-                        "in_off": np.array([-1], dtype=np.int64),
-                        "pos": np.array([-1], dtype=np.int64),
-                        "seq": np.array([0], dtype=np.int64),
-                        "out_offset": np.array([0], dtype=np.int32),
-                        "kind": [KIND_ERROR],
-                        "text": [f"[Error processing doc {did}]"],
-                        "media_ref": [None],
-                    }
-                )
-                o = (
-                    o[["doc_id", "out_offset", "kind", "text", "media_ref"]]
-                    if enumerate_offsets
-                    else o[["doc_id", "in_off", "pos", "seq", "kind", "text", "media_ref"]]
-                )
-                m = pd.DataFrame(
-                    {
-                        "doc_id": [did],
-                        "n_spans": np.array([1], dtype=np.int64),
-                        "parse_failed": [True],
-                        "bytes_in": np.array([0], dtype=np.int64),
-                    }
-                )
-            outs.append(o)
-            mets.append(m)
-        return (
-            pd.concat(outs, ignore_index=True) if outs else _empty_out(),
-            pd.concat(mets, ignore_index=True)
-            if mets
-            else pd.DataFrame(columns=["doc_id", "n_spans", "parse_failed", "bytes_in"]),
-        )
+        pass  # isolate the poison docs below
+    doc = span_rows["doc"].to_numpy(np.int64)
+    order = np.argsort(doc, kind="stable")
+    bounds = np.searchsorted(doc[order], np.arange(len(doc_ids) + 1))
+    outs, mets = [], []
+    for i in range(len(doc_ids)):
+        rows = span_rows.iloc[order[bounds[i]:bounds[i + 1]]].assign(doc=0)
+        one = doc_ids[i:i + 1]
+        try:
+            o, m = extract_docs(rows, one, enumerate_offsets=enumerate_offsets)
+        except MemoryError:
+            raise
+        except Exception:
+            nbytes = np.array([rows["text_bytes"].sum()], dtype=np.int64)
+            o, m = _seal(_sentinels(np.zeros(1, np.int64), one), np.ones(1, bool),
+                         nbytes, enumerate_offsets)
+        outs.append(o.assign(doc=i))
+        mets.append(m)
+    return pd.concat(outs, ignore_index=True), pd.concat(mets, ignore_index=True)
 
 
 # ---------------------------------------------------------------------------------
@@ -409,23 +287,20 @@ def extract_docs_safe(
 
 
 def _record_batch_to_rows(batch: pa.RecordBatch) -> tuple[np.ndarray, pd.DataFrame]:
-    """Flatten (doc_id, spans list<struct>) Arrow batch to exploded pandas span rows
-    using Arrow list offsets — vectorized, no Python per row."""
-    import pyarrow.compute as pc
-
+    """Flatten a corpus batch (doc_id, spans list<struct>) to exploded span rows
+    keyed by ``doc`` = the batch row, using Arrow list offsets — vectorized, no
+    Python per row."""
     doc_ids = batch.column("doc_id").to_pandas().to_numpy(dtype=object)
     spans = batch.column("spans")
-    parent = pc.list_parent_indices(spans).to_numpy(zero_copy_only=False)
+    doc = pc.list_parent_indices(spans).to_numpy(zero_copy_only=False).astype(np.int64)
     flat = pc.list_flatten(spans)
     # pos = index within the doc's input array (flat rows are parent-ordered)
-    counts = np.bincount(parent, minlength=len(doc_ids)) if len(parent) else np.zeros(len(doc_ids), np.int64)
-    starts = np.zeros(len(doc_ids), dtype=np.int64)
-    np.cumsum(counts[:-1], out=starts[1:]) if len(doc_ids) > 1 else None
-    pos = np.arange(len(parent), dtype=np.int64) - starts[parent] if len(parent) else np.empty(0, np.int64)
+    counts = np.bincount(doc, minlength=len(doc_ids))
+    pos = np.arange(len(doc), dtype=np.int64) - (np.cumsum(counts) - counts)[doc]
     text_arr = flat.field("text")
     span_rows = pd.DataFrame(
         {
-            "doc_id": doc_ids[parent],
+            "doc": doc,
             "kind": flat.field("kind").to_pandas().to_numpy(dtype=object),
             "text": text_arr.to_pandas().to_numpy(dtype=object),
             "media_ref": flat.field("media_ref").to_pandas().to_numpy(dtype=object),
@@ -443,57 +318,29 @@ def _record_batch_to_rows(batch: pa.RecordBatch) -> tuple[np.ndarray, pd.DataFra
 def _rows_to_record_batch(
     doc_ids: np.ndarray, out: pd.DataFrame, metrics: pd.DataFrame
 ) -> pa.RecordBatch:
-    """Reassemble output span rows into the EXTRACTED_ARROW batch, preserving the
-    input doc order and emitting an empty spans array for spanless docs."""
-    idx = pd.Index(doc_ids)
-    if idx.is_unique:
-        # hash-map doc position + integer lexsort instead of an object-key
-        # merge + sort_values — same rows, same order (out_offset is unique
-        # per doc, so the sort is deterministic)
-        pos = idx.get_indexer(out["doc_id"].to_numpy(dtype=object))
-        if (pos < 0).any():  # inner-merge semantics: drop unknown doc rows
-            m = pos >= 0
-            out = out.loc[m]
-            pos = pos[m]
-        order = np.lexsort((out["out_offset"].to_numpy(), pos))
-        o = out.iloc[order]
-        pos = pos[order]
-        counts = np.bincount(pos, minlength=len(doc_ids))
-    else:
-        order_df = pd.DataFrame({"doc_id": doc_ids, "_doc_pos": np.arange(len(doc_ids))})
-        o = out.merge(order_df, on="doc_id", how="inner")
-        o = o.sort_values(["_doc_pos", "out_offset"], kind="stable")
-        counts = (
-            o.groupby("_doc_pos", sort=True)
-            .size()
-            .reindex(range(len(doc_ids)), fill_value=0)
-            .to_numpy()
-        )
+    """Assemble the EXTRACTED_ARROW batch: one row per doc code, in code order,
+    with an empty spans array for spanless docs. Takes what
+    :func:`extract_docs_safe` returns: ``out`` sorted by (doc, out_offset),
+    ``metrics`` aligned with ``doc_ids``."""
     offsets = np.zeros(len(doc_ids) + 1, dtype=np.int32)
-    np.cumsum(counts, out=offsets[1:])
-
+    np.cumsum(np.bincount(out["doc"].to_numpy(np.int64), minlength=len(doc_ids)),
+              out=offsets[1:])
     struct = pa.StructArray.from_arrays(
         [
-            pa.array(o["kind"].to_numpy(dtype=object), type=pa.string()),
-            pa.array(o["text"].where(o["text"].notna(), None).to_numpy(dtype=object), type=pa.string()),
-            pa.array(
-                o["media_ref"].where(o["media_ref"].notna(), None).to_numpy(dtype=object),
-                type=pa.string(),
-            ),
-            pa.array(o["out_offset"].to_numpy(np.int32), type=pa.int32()),
+            pa.array(out["kind"], type=pa.string()),
+            pa.array(out["text"], type=pa.string()),
+            pa.array(out["media_ref"], type=pa.string()),
+            pa.array(out["out_offset"].to_numpy(np.int32), type=pa.int32()),
         ],
         fields=list(EXTRACTED_ARROW.field("spans").type.value_type),
     )
-    spans_arr = pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()), struct)
-
-    m = metrics.set_index("doc_id").reindex(pd.Index(doc_ids))
     return pa.RecordBatch.from_arrays(
         [
             pa.array(doc_ids, type=pa.string()),
-            spans_arr,
-            pa.array(m["n_spans"].fillna(0).to_numpy(np.int64), type=pa.int64()),
-            pa.array(m["parse_failed"].fillna(True).to_numpy(bool), type=pa.bool_()),
-            pa.array(m["bytes_in"].fillna(0).to_numpy(np.int64), type=pa.int64()),
+            pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()), struct),
+            pa.array(metrics["n_spans"].to_numpy(np.int64), type=pa.int64()),
+            pa.array(metrics["parse_failed"].to_numpy(bool), type=pa.bool_()),
+            pa.array(metrics["bytes_in"].to_numpy(np.int64), type=pa.int64()),
         ],
         schema=EXTRACTED_ARROW,
     )
@@ -513,7 +360,8 @@ def _pin_worker_threads() -> None:
 
 
 def extract_map_in_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """The mapInArrow function: corpus batches in, EXTRACTED_ARROW batches out."""
+    """The mapInArrow function: corpus batches in, EXTRACTED_ARROW batches out,
+    one output row per input row."""
     _pin_worker_threads()
     for batch in batches:
         if batch.num_rows == 0:
@@ -526,57 +374,35 @@ def extract_map_in_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Recor
 def extract_chunk_map_in_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """mapInArrow function for the salted mega-doc path: chunk rows (one row per
     input span, with pre-computed doc routing) in, CHUNK_OUT_ARROW rows out — no
-    final offset enumeration (the reassembly groupBy seals offsets). One marker
-    row per doc carries the chunk's input byte count so the reassembly needs no
-    extra joins/aggregations."""
-    from .schema import CHUNK_MARKER_OFF, CHUNK_OUT_ARROW, KIND_CHUNK_MARKER
-
+    final offset enumeration (the reassembly groupBy seals offsets). Rows of one
+    ``doc_id`` share one doc code. One marker row per doc carries the chunk's
+    input byte count so the reassembly needs no extra joins/aggregations."""
     _pin_worker_threads()
-    import pyarrow.compute as pc
-
     for batch in batches:
         if batch.num_rows == 0:
             continue
         df = batch.to_pandas()
+        codes, uniq = pd.factorize(df.pop("doc_id"))
+        doc_ids = np.asarray(uniq, dtype=object)
+        df["doc"] = codes
         df["text_bytes"] = pc.fill_null(
             pc.binary_length(batch.column("text")), 0
         ).to_numpy(zero_copy_only=False)
-        doc_ids = df["doc_id"].unique()
         out, metrics = extract_docs_safe(df, doc_ids, enumerate_offsets=False)
         out = out.astype({"in_off": np.int64, "pos": np.int64, "seq": np.int64})
+        out.insert(0, "doc_id", doc_ids[out.pop("doc").to_numpy(np.int64)])
         out["bytes_in"] = np.int64(0)
         markers = pd.DataFrame(
             {
-                "doc_id": metrics["doc_id"],
+                "doc_id": doc_ids,
                 "in_off": np.int64(CHUNK_MARKER_OFF),
                 "pos": np.int64(0),
                 "seq": np.int64(0),
                 "kind": KIND_CHUNK_MARKER,
                 "text": None,
                 "media_ref": None,
-                "bytes_in": metrics["bytes_in"].astype(np.int64),
+                "bytes_in": metrics["bytes_in"].to_numpy(np.int64),
             }
         )
         out = pd.concat([out, markers], ignore_index=True)
         yield pa.RecordBatch.from_pandas(out, schema=CHUNK_OUT_ARROW, preserve_index=False)
-
-
-def extract_batch_pandas(docs: pd.DataFrame) -> pd.DataFrame:
-    """Pandas-level convenience used by tests and the applyInPandas mega-doc path:
-    (doc_id, spans: list[dict]) → EXTRACTED_ARROW-shaped pandas frame."""
-    doc_ids = docs["doc_id"].to_numpy(dtype=object)
-    n = docs["spans"].str.len().fillna(0).astype(np.int64).to_numpy()
-    idx = np.repeat(np.arange(len(docs)), n)
-    flat = [s for lst in docs["spans"] for s in (lst if lst is not None else [])]
-    span_rows = pd.DataFrame(
-        {
-            "doc_id": doc_ids[idx],
-            "kind": [s["kind"] for s in flat],
-            "text": [s["text"] for s in flat],
-            "media_ref": [s["media_ref"] for s in flat],
-            "offset": np.array([s["offset"] for s in flat], dtype=np.int64),
-        }
-    )
-    out, metrics = extract_docs_safe(span_rows, doc_ids)
-    rb = _rows_to_record_batch(doc_ids, out, metrics)
-    return rb.to_pandas()

@@ -20,30 +20,6 @@ def group_codes(df: pd.DataFrame, cols: list[str]) -> np.ndarray:
     return codes.astype(np.int64)
 
 
-def grouped_shift(values: np.ndarray, codes: np.ndarray, n: int, fill=None) -> np.ndarray:
-    """``Series.groupby().shift(n)`` over contiguous groups, but pure numpy.
-
-    values[i-n] where codes[i-n] == codes[i], else `fill`. Positive n looks back
-    (lookbehind), negative looks ahead (lookahead). O(len) with no Python loop.
-    """
-    m = len(values)
-    out = np.full(m, fill, dtype=object if fill is None else values.dtype)
-    if m == 0 or n == 0:
-        if n == 0:
-            return values.copy()
-        return out
-    if n > 0:
-        valid = np.zeros(m, dtype=bool)
-        valid[n:] = codes[n:] == codes[:-n]
-        out[valid] = values[np.nonzero(valid)[0] - n]
-    else:
-        k = -n
-        valid = np.zeros(m, dtype=bool)
-        valid[:-k] = codes[:-k] == codes[k:]
-        out[valid] = values[np.nonzero(valid)[0] + k]
-    return out
-
-
 def grouped_cumsum(values: np.ndarray, codes: np.ndarray) -> np.ndarray:
     """Cumulative sum restarting at each contiguous group boundary (pure numpy):
     one global cumsum + one repeat of per-group bases. Codes MUST be contiguous."""
@@ -58,46 +34,6 @@ def grouped_cumsum(values: np.ndarray, codes: np.ndarray) -> np.ndarray:
     sizes = np.diff(np.append(starts, m))
     base = np.repeat(cs[starts] - v[starts], sizes)
     return cs - base
-
-
-def grouped_cummax_bool(values: np.ndarray, codes: np.ndarray) -> np.ndarray:
-    """Cumulative OR within contiguous groups (used for leading-whitespace trims)."""
-    return grouped_cumsum(values.astype(np.int64), codes) > 0
-
-
-def grouped_cummax_bool_rev(values: np.ndarray, codes: np.ndarray) -> np.ndarray:
-    """Reverse cumulative OR within contiguous groups (trailing trims)."""
-    return grouped_cummax_bool(values[::-1], codes[::-1])[::-1]
-
-
-def hex_to_chars(hex8: pd.Series) -> np.ndarray:
-    """Decode a Series of 8-digit hex codepoints to a '<U1' char array, vectorized.
-
-    Trick: join into one hex blob → bytes.fromhex (C) → big-endian uint32 view →
-    utf-32 decode (C) → one big str → char array. No per-element Python.
-    """
-    if not len(hex8):
-        return np.empty(0, dtype="<U1")
-    blob = bytes.fromhex("".join(hex8.to_numpy()))
-    cps = np.frombuffer(blob, dtype=">u4")
-    big = cps.astype("<u4").tobytes().decode("utf-32-le")
-    return np.array(list(big), dtype="<U1")
-
-
-def cps_to_hex(cps: np.ndarray) -> np.ndarray:
-    """uint32 codepoint array → 8-digit hex strings, vectorized (C hex codec)."""
-    if not len(cps):
-        return np.empty(0, dtype="<U8")
-    hx = cps.astype(">u4").tobytes().hex()
-    return np.frombuffer(hx.encode(), dtype="S8").astype("U8")
-
-
-def chars_to_hex(chars: np.ndarray) -> np.ndarray:
-    """Inverse of hex_to_chars: '<U1' char array → 8-digit hex strings, vectorized."""
-    if not len(chars):
-        return np.empty(0, dtype="<U8")
-    cps = np.frombuffer("".join(chars).encode("utf-32-le"), dtype="<u4")
-    return cps_to_hex(cps)
 
 
 def repeat_frame(df: pd.DataFrame, counts: np.ndarray) -> pd.DataFrame:

@@ -147,6 +147,12 @@ def extract_corpus(
     """corpus (doc_id, spans) → EXTRACTED_SCHEMA (doc_id, spans, n_spans,
     parse_failed, bytes_in). Normal docs shuffle-free; skewed mega-docs salted.
 
+    The normal branch extracts every input row on its own (one output row per
+    input row). The salted branch keeps ``doc_id`` as its reassembly key: all
+    spans of one ``doc_id`` are grouped back into ONE output row, so a
+    ``doc_id`` repeated in the corpus is merged there — doc_ids are expected
+    to be unique.
+
     ``size_col`` names an OPTIONAL precomputed span-count column (see
     write_corpus_parquet) used for the normal/mega routing predicate instead of
     ``size(spans)``. The difference matters at scale: ``size(spans)`` cannot

@@ -54,3 +54,20 @@ def rows_to_tuples(spans) -> list[tuple]:
 
 def golden_tuples(golden_spans: list[list]) -> list[tuple]:
     return [tuple(s) for s in golden_spans]
+
+
+def extract_rows(docs: list[dict], batch_rows: int | None = None) -> list[dict]:
+    """Run docs ({doc_id, spans}) through the production mapInArrow function as
+    one CORPUS_ARROW batch, or as slices of ``batch_rows`` rows; returns the
+    EXTRACTED_ARROW rows in input order."""
+    import pyarrow as pa
+
+    from pdf_extract_sys_spark.extract import extract_map_in_arrow
+    from pdf_extract_sys_spark.schema import CORPUS_ARROW
+
+    batch = pa.RecordBatch.from_pylist(
+        [{"doc_id": d["doc_id"], "spans": d["spans"]} for d in docs], schema=CORPUS_ARROW
+    )
+    step = batch_rows or max(len(docs), 1)
+    batches = [batch.slice(i, step) for i in range(0, len(docs), step)]
+    return [r for b in extract_map_in_arrow(iter(batches)) for r in b.to_pylist()]

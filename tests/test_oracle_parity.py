@@ -5,10 +5,10 @@ transcription on seeded random corpora (multiple seeds, mega-docs, garbage docs)
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pytest
+from conftest import extract_rows
 from oracle import oracle_extract_doc
-from test_fixture_goldens import run_pandas
+from test_fixture_goldens import run_docs
 
 from pdf_extract_sys_spark import corpus as C
 
@@ -18,7 +18,7 @@ def test_random_corpus_matches_oracle(seed: int):
     docs = C.generate_corpus(80, seed=seed, mega_doc_every=29, mega_doc_pages=16).to_dict(
         "records"
     )
-    mine = run_pandas(docs)
+    mine = run_docs(docs)
     for d in docs:
         gold = [
             (s["kind"], s["text"], s["media_ref"], s["offset"])
@@ -31,7 +31,7 @@ def test_frozen_seed42_corpus(goldens_seed42):
     docs = C.generate_corpus(120, seed=42, mega_doc_every=40, mega_doc_pages=24).to_dict(
         "records"
     )
-    mine = run_pandas(docs)
+    mine = run_docs(docs)
     for did, spans in goldens_seed42.items():
         assert mine[did] == [tuple(s) for s in spans], did
 
@@ -40,7 +40,7 @@ def test_input_row_permutation_invariance():
     """Shuffling input span-row order within docs never changes output (order is
     reconstructed from `offset`, never from arrival order — SURVEY.md §2 O7)."""
     docs = C.generate_corpus(40, seed=9).to_dict("records")
-    base = run_pandas(docs)
+    base = run_docs(docs)
     rng = np.random.default_rng(0)
     shuffled = []
     for d in docs:
@@ -48,7 +48,7 @@ def test_input_row_permutation_invariance():
         rng.shuffle(sp)
         shuffled.append({"doc_id": d["doc_id"], "spans": sp})
     rng.shuffle(shuffled)
-    assert run_pandas(shuffled) == base
+    assert run_docs(shuffled) == base
 
 
 def test_sentinel_totality_fuzz():
@@ -62,7 +62,7 @@ def test_sentinel_totality_fuzz():
         docs.append(
             {"doc_id": f"fz-{i}", "spans": [C.span(str(kind), blob, None if rng.random() < 0.8 else "m", 0)]}
         )
-    res = run_pandas(docs)
+    res = run_docs(docs)
     for d in docs:
         gold = [
             (s["kind"], s["text"], s["media_ref"], s["offset"])
@@ -73,20 +73,14 @@ def test_sentinel_totality_fuzz():
 
 def test_metrics_counts():
     docs = C.generate_corpus(50, seed=5).to_dict("records")
-    doc_ids = np.array([d["doc_id"] for d in docs], dtype=object)
-    flat = [dict(s, doc_id=d["doc_id"]) for d in docs for s in d["spans"]]
-    span_rows = pd.DataFrame(flat)[["doc_id", "kind", "text", "media_ref", "offset"]]
-
-    from pdf_extract_sys_spark.extract import extract_docs_safe
-
-    out, met = extract_docs_safe(span_rows, doc_ids)
-    met = met.set_index("doc_id")
-    per_doc = out.groupby("doc_id").size()
+    rows = extract_rows(docs)
+    met = {r["doc_id"]: r for r in rows}
+    per_doc = {r["doc_id"]: len(r["spans"]) for r in rows}
     for d in docs:
         did = d["doc_id"]
         gold = oracle_extract_doc(did, d["spans"])
-        assert met.loc[did, "n_spans"] == len(gold)
-        assert met.loc[did, "n_spans"] == per_doc.get(did, 0)
-        assert bool(met.loc[did, "parse_failed"]) == (gold[0]["kind"] == "error" if gold else False)
+        assert met[did]["n_spans"] == len(gold)
+        assert met[did]["n_spans"] == per_doc.get(did, 0)
+        assert bool(met[did]["parse_failed"]) == (gold[0]["kind"] == "error" if gold else False)
         exp_bytes = sum(len(s["text"].encode()) for s in d["spans"] if s["text"] is not None)
-        assert met.loc[did, "bytes_in"] == exp_bytes
+        assert met[did]["bytes_in"] == exp_bytes

@@ -558,9 +558,6 @@ def test_pure_image_pdf_needs_ocr_not_zero_spans(spark):
 def test_truly_empty_page_still_yields_zero_spans():
     """A page with NO content (no text, no images) keeps the old behavior:
     zero spans, no needs_ocr, no sentinel."""
-    import pandas as pd
-
-    from pdf_extract_sys_spark.extract import extract_batch_pandas
     from pdf_extract_sys_spark.sources.pdf_bytes import pdf_to_page_records
 
     recs = pdf_to_page_records(make_pdf([b"q Q"]))
