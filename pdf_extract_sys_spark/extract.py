@@ -2,15 +2,14 @@
 
 This module is the ONLY Python that runs on the hot path, invoked from
 ``pipeline.py`` via ``mapInArrow`` — over whole docs (zero shuffle) and over the
-salted mega-doc chunk rows. Everything inside is vectorized pandas/numpy over
-Arrow batches.
+salted mega-doc chunks, which are rows of the same corpus shape. Everything
+inside is vectorized pandas/numpy over Arrow batches.
 
-The unit of work is one Arrow batch. Its entry function gives every document an
-integer code ``doc`` (the batch row for whole docs, the factorized ``doc_id``
-for chunk rows); the kernels key on that code, and ``doc_id`` strings are
-attached only for sentinel text and the output batch. A repeated ``doc_id`` in
-one batch is therefore two documents, each extracted exactly as if it were
-alone in its batch.
+The unit of work is one Arrow batch. Its entry function gives every row an
+integer doc code ``doc`` (the batch row); the kernels key on that code, and
+``doc_id`` strings are attached only for sentinel text and the output batch. A
+repeated ``doc_id`` in one batch is therefore two documents, each extracted
+exactly as if it were alone in its batch.
 
 Routing semantics (reference: ``backend/app/main.py:171-205``):
   * a doc is *searchable* iff ANY of its pdf_chars pages has stripped text length
@@ -18,6 +17,8 @@ Routing semantics (reference: ``backend/app/main.py:171-205``):
     its ocr_words pages are ignored; otherwise pdf_chars pages are ignored and
     ocr_words pages are OCR-grouped (the reference renders+OCRs the same pages;
     here both representations may be present in one doc — FIXTURES.md).
+    A mega-doc chunk cannot see its sibling chunks' pages, so the pipeline
+    computes the flag per doc and passes it in as a ``searchable`` column.
   * html and media spans are always processed, independent of the classifier.
 
 Sentinel totality (``main.py:361-372, 642-646, 731-735``): any doc whose payload
@@ -46,11 +47,8 @@ from .kernels import ocr as ocr_k
 from .kernels import pdf_text as pdf_k
 from .kernels.util import grouped_cumsum
 from .schema import (
-    CHUNK_MARKER_OFF,
-    CHUNK_OUT_ARROW,
     EXTRACTED_ARROW,
     INPUT_KINDS,
-    KIND_CHUNK_MARKER,
     KIND_ERROR,
     KIND_HTML,
     KIND_MEDIA,
@@ -89,17 +87,17 @@ def _part(doc, in_off, pos, seq, kind, text, media_ref) -> pd.DataFrame:
 
 
 def _sentinels(codes: np.ndarray, doc_ids: np.ndarray) -> pd.DataFrame:
-    """The doc-level error span for each failed doc code; in_off = -1 marks it
-    as a doc sentinel for the salted reassembly."""
+    """The doc-level error span for each failed doc code."""
     text = "[Error processing doc " + pd.Series(doc_ids[codes], dtype=object) + "]"
-    return _part(codes, -1, -1, 0, KIND_ERROR, text, None)
+    return _part(codes, 0, 0, 0, KIND_ERROR, text, None)
 
 
 def _seal(
-    allp: pd.DataFrame, failed: np.ndarray, bytes_in: np.ndarray, enumerate_offsets: bool
+    allp: pd.DataFrame, failed: np.ndarray, bytes_in: np.ndarray
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
-    """Sort rows into reading order (doc, in_off, pos, seq) and return
-    (out, metrics); metrics rows are aligned with the doc codes."""
+    """Sort rows into reading order (doc, in_off, pos, seq), enumerate the
+    output offsets per doc and return (out, metrics); metrics rows are aligned
+    with the doc codes."""
     doc = allp["doc"].to_numpy(np.int64)
     order = np.lexsort(
         (allp["seq"].to_numpy(), allp["pos"].to_numpy(), allp["in_off"].to_numpy(), doc)
@@ -113,8 +111,6 @@ def _seal(
             "bytes_in": bytes_in,
         }
     )
-    if not enumerate_offsets:
-        return out[["doc", "in_off", "pos", "seq", "kind", "text", "media_ref"]], metrics
     out["out_offset"] = (grouped_cumsum(np.ones(len(doc), np.int64), doc) - 1).astype(np.int32)
     return out[["doc", "out_offset", "kind", "text", "media_ref"]], metrics
 
@@ -122,8 +118,7 @@ def _seal(
 def extract_docs(
     span_rows: pd.DataFrame,
     doc_ids: np.ndarray,
-    *,
-    enumerate_offsets: bool = True,
+    searchable: np.ndarray | None = None,
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
     """Core vectorized extraction over exploded input spans.
 
@@ -133,17 +128,14 @@ def extract_docs(
       * ``pos``        — the span's index within the doc's input array
         (deterministic tie-break for duplicate offsets)
       * ``text_bytes`` — utf-8 byte length of ``text`` (0 for NULL)
-      * optionally ``route`` — doc-level routing override for the salted
-        mega-doc path ('text' | 'ocr' | None): a chunk cannot see the sibling
-        pages that decide the searchable classifier, so the pipeline
-        pre-computes it (SURVEY.md §2 S5)
     doc_ids: the doc_id of every doc code (docs with zero input spans included).
+    searchable: optional doc-level classifier result aligned with ``doc_ids``;
+      the salted mega-doc chunks pass it in because a chunk cannot see the
+      sibling pages that decide it (SURVEY.md §2 S5). ``None`` classifies each
+      doc from its own pdf_chars pages.
 
     Returns (out, metrics). ``out`` is sorted by (doc, reading order) with
-    columns (doc, out_offset, kind, text, media_ref); with
-    enumerate_offsets=False it keeps the sort key (doc, in_off, pos, seq)
-    instead of out_offset (sentinels get in_off=-1) — the salted path
-    enumerates after reassembling all chunks of a doc. ``metrics`` has one row
+    columns (doc, out_offset, kind, text, media_ref). ``metrics`` has one row
     per doc code: (n_spans, parse_failed, bytes_in).
     May raise — callers go through :func:`extract_docs_safe`.
     """
@@ -171,18 +163,11 @@ def extract_docs(
     pdf_ev, bad_pdf = pdf_k.decode_pdf_core(_pages(ok_rows(KIND_PDF_CHARS)))
     failed[np.asarray(bad_pdf, dtype=np.int64)] = True  # their events are dropped
 
-    plens = pdf_k.page_stripped_lengths_core(pdf_ev)
     tab_docs = pdf_ev.page_tab["doc_id"].to_numpy(np.int64)
-    searchable = np.zeros(ndocs, dtype=bool)
-    searchable[tab_docs[plens > SEARCHABLE_THRESHOLD]] = True
-    # mega-doc chunk path: the pipeline pre-computed doc-level routing (a chunk
-    # cannot see sibling pages) — apply the override
-    if "route" in sr.columns:
-        rt = sr.dropna(subset=["route"]).drop_duplicates("doc")
-        rdoc = rt["doc"].to_numpy(np.int64)
-        route = rt["route"].to_numpy()
-        searchable[rdoc[route == "text"]] = True
-        searchable[rdoc[route == "ocr"]] = False
+    if searchable is None:
+        plens = pdf_k.page_stripped_lengths_core(pdf_ev)
+        searchable = np.zeros(ndocs, dtype=bool)
+        searchable[tab_docs[plens > SEARCHABLE_THRESHOLD]] = True
 
     pdf_spans = pdf_k.segment_sentences_core(pdf_ev.select_pages(searchable[tab_docs]))
 
@@ -195,14 +180,13 @@ def extract_docs(
     failed[np.asarray(bad_ocr, dtype=np.int64)] = True  # their events are dropped
     ocr_spans = ocr_k.group_ocr_lines_core(ocr_ev)
 
-    # --- html: the input-array position is carried onto the kernel output -------
+    # --- html: keyed by input row, so two payloads sharing one offset keep ------
+    # their own line sequences; (doc, offset, pos) are taken back by row index
     html_pages = _pages(ok_rows(KIND_HTML))
-    html_spans = html_k.extract_html_spans(html_pages[["doc_id", "page", "payload"]])
-    html_spans = html_spans.astype({"doc_id": np.int64}).merge(
-        html_pages.drop_duplicates(["doc_id", "page"])[["doc_id", "page", "pos"]],
-        on=["doc_id", "page"],
-        how="left",
+    html_spans = html_k.extract_html_spans(
+        html_pages[["doc_id", "payload"]].assign(page=np.arange(len(html_pages)))
     )
+    html_src = html_pages.iloc[html_spans["page"].to_numpy(np.int64)]
 
     # --- passthroughs, independent of the searchable classifier ------------------
     # media (FIXTURES.md kind #4 / F17); needs_ocr (r3 VERDICT #6): image-only PDF
@@ -221,7 +205,7 @@ def extract_docs(
                   pdf_spans["seq"], KIND_TEXT, pdf_spans["text"], None),
             _part(ocr_spans["doc_id"], ocr_spans["page"], ocr_spans["pos"],
                   ocr_spans["seq"], KIND_TEXT, ocr_spans["text"], None),
-            _part(html_spans["doc_id"], html_spans["page"], html_spans["pos"],
+            _part(html_src["doc_id"], html_src["page"], html_src["pos"],
                   html_spans["seq"], html_spans["kind"], html_spans["text"],
                   html_spans["media_ref"]),
             _part(media["doc"], media["offset"], media["pos"], 0, KIND_MEDIA,
@@ -240,14 +224,13 @@ def extract_docs(
     allp = allp.loc[~failed[allp["doc"].to_numpy(np.int64)]]
     if failed.any():
         allp = pd.concat([allp, _sentinels(np.flatnonzero(failed), doc_ids)], ignore_index=True)
-    return _seal(allp, failed, bytes_in, enumerate_offsets)
+    return _seal(allp, failed, bytes_in)
 
 
 def extract_docs_safe(
     span_rows: pd.DataFrame,
     doc_ids: np.ndarray,
-    *,
-    enumerate_offsets: bool = True,
+    searchable: np.ndarray | None = None,
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
     """Sentinel-totality wrapper over :func:`extract_docs` (same contract): if a
     kernel raises on the batch, the docs are re-run one at a time — the rows
@@ -256,7 +239,7 @@ def extract_docs_safe(
     is an infrastructure failure, not a parse failure: it propagates so that
     Spark retries the task."""
     try:
-        return extract_docs(span_rows, doc_ids, enumerate_offsets=enumerate_offsets)
+        return extract_docs(span_rows, doc_ids, searchable)
     except MemoryError:
         raise
     except Exception:
@@ -269,13 +252,12 @@ def extract_docs_safe(
         rows = span_rows.iloc[order[bounds[i]:bounds[i + 1]]].assign(doc=0)
         one = doc_ids[i:i + 1]
         try:
-            o, m = extract_docs(rows, one, enumerate_offsets=enumerate_offsets)
+            o, m = extract_docs(rows, one, None if searchable is None else searchable[i:i + 1])
         except MemoryError:
             raise
         except Exception:
             nbytes = np.array([rows["text_bytes"].sum()], dtype=np.int64)
-            o, m = _seal(_sentinels(np.zeros(1, np.int64), one), np.ones(1, bool),
-                         nbytes, enumerate_offsets)
+            o, m = _seal(_sentinels(np.zeros(1, np.int64), one), np.ones(1, bool), nbytes)
         outs.append(o.assign(doc=i))
         mets.append(m)
     return pd.concat(outs, ignore_index=True), pd.concat(mets, ignore_index=True)
@@ -372,37 +354,16 @@ def extract_map_in_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Recor
 
 
 def extract_chunk_map_in_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """mapInArrow function for the salted mega-doc path: chunk rows (one row per
-    input span, with pre-computed doc routing) in, CHUNK_OUT_ARROW rows out — no
-    final offset enumeration (the reassembly groupBy seals offsets). Rows of one
-    ``doc_id`` share one doc code. One marker row per doc carries the chunk's
-    input byte count so the reassembly needs no extra joins/aggregations."""
+    """The mapInArrow function of the salted mega-doc path: chunk rows (the
+    corpus columns plus the doc-level ``searchable`` flag and the ``chunk``
+    index) in, EXTRACTED_ARROW batches with ``chunk`` appended out."""
     _pin_worker_threads()
     for batch in batches:
         if batch.num_rows == 0:
             continue
-        df = batch.to_pandas()
-        codes, uniq = pd.factorize(df.pop("doc_id"))
-        doc_ids = np.asarray(uniq, dtype=object)
-        df["doc"] = codes
-        df["text_bytes"] = pc.fill_null(
-            pc.binary_length(batch.column("text")), 0
-        ).to_numpy(zero_copy_only=False)
-        out, metrics = extract_docs_safe(df, doc_ids, enumerate_offsets=False)
-        out = out.astype({"in_off": np.int64, "pos": np.int64, "seq": np.int64})
-        out.insert(0, "doc_id", doc_ids[out.pop("doc").to_numpy(np.int64)])
-        out["bytes_in"] = np.int64(0)
-        markers = pd.DataFrame(
-            {
-                "doc_id": doc_ids,
-                "in_off": np.int64(CHUNK_MARKER_OFF),
-                "pos": np.int64(0),
-                "seq": np.int64(0),
-                "kind": KIND_CHUNK_MARKER,
-                "text": None,
-                "media_ref": None,
-                "bytes_in": metrics["bytes_in"].to_numpy(np.int64),
-            }
+        doc_ids, span_rows = _record_batch_to_rows(batch)
+        searchable = batch.column("searchable").to_numpy(zero_copy_only=False)
+        out, metrics = extract_docs_safe(span_rows, doc_ids, searchable)
+        yield _rows_to_record_batch(doc_ids, out, metrics).append_column(
+            "chunk", batch.column("chunk")
         )
-        out = pd.concat([out, markers], ignore_index=True)
-        yield pa.RecordBatch.from_pandas(out, schema=CHUNK_OUT_ARROW, preserve_index=False)

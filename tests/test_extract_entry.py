@@ -46,6 +46,21 @@ def test_repeated_doc_id_independent_of_batch_boundaries():
         ]
 
 
+def test_html_spans_sharing_an_offset_keep_their_own_lines():
+    """Two html payloads at one offset come out payload by payload, each in
+    its own line order — not interleaved line by line."""
+    def page(tag: str) -> str:
+        return "".join(f"<p>Line {tag}{i} of this payload is long enough to keep.</p>"
+                       for i in (1, 2))
+
+    doc = {"doc_id": "h2", "spans": [C.span("html", page("A"), None, 0),
+                                     C.span("html", page("B"), None, 0)]}
+    (row,) = extract_rows([doc])
+    gold = oracle_extract_doc(doc["doc_id"], doc["spans"])
+    assert [t[1][5:7] for t in _tuples(row)] == ["A1", "A2", "B1", "B2"]
+    assert _tuples(row) == [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in gold]
+
+
 def test_kernel_exception_sentinels_only_the_poison_doc(monkeypatch):
     docs = _docs() + [_html_doc("h-ok", "This paragraph"), _html_doc("h-bad", "POISON")]
     clean = extract_rows(docs)

@@ -1,5 +1,5 @@
 """Package hygiene: every module-level def, class and constant of the extraction
-modules is used by package code — referenced as a Name or Attribute somewhere
+modules and the schemas is used by package code — referenced as a Name or Attribute somewhere
 in ``pdf_extract_sys_spark`` (docstring mentions do not count) — so dead
 helpers and test-only conveniences cannot accumulate in the production path."""
 
@@ -13,6 +13,7 @@ import pytest
 PKG = Path(__file__).resolve().parents[1] / "pdf_extract_sys_spark"
 CHECKED = [
     "extract.py",
+    "schema.py",
     "kernels/pdf_text.py",
     "kernels/ocr.py",
     "kernels/html.py",

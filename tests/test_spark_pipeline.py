@@ -3,16 +3,22 @@
   (b) salt invariance — salted mega-doc execution byte-identical to unsalted,
   (c) idempotent resume — crash after k partitions, resume, equals single run,
   (d) plan audit — no per-row Python anywhere,
-  (e) checkpoint lineage metrics match the data."""
+  (e) checkpoint lineage metrics match the data,
+  (f) the mega-doc chunk cut keeps reading order under any parallelism."""
 
 from __future__ import annotations
 
+import subprocess
+import sys
 import uuid
+from pathlib import Path
 
+import numpy as np
 import pandas as pd
 import pytest
 from conftest import golden_tuples, rows_to_tuples
 from fixtures_def import fixture_docs
+from oracle import oracle_extract_doc
 
 from pdf_extract_sys_spark import corpus as C
 from pdf_extract_sys_spark.checkpoint import run_extraction, with_partition_id
@@ -198,7 +204,7 @@ def test_page_error_spans_survive_salting_without_doc_sentinel(spark, tmp_path):
     """A page_error input span (r4 VERDICT #3) must come out as a page-scoped
     '[Error processing page N]' span — IDENTICALLY on the normal and the
     salted path — and must NOT mark the doc parse_failed or promote it to the
-    doc-level sentinel (only in_off=-1 sentinels do that)."""
+    doc-level sentinel (only a parse failure in some chunk does that)."""
     payload = "PAGE\t612\t792\n" + "\n".join(
         f"{ord(c):08x}\t{10 + 7 * i}\t760\t{17 + 7 * i}\t772"
         for i, c in enumerate(
@@ -232,3 +238,61 @@ def test_page_error_spans_survive_salting_without_doc_sentinel(spark, tmp_path):
         assert kinds[0] == "text"  # page 0 extracted normally
         assert not r["parse_failed"]
     assert collect_spans(normal) == collect_spans(salted)
+
+
+def _scrambled(spans: list[dict], rng: np.random.Generator) -> list[dict]:
+    """Every media span takes its neighbour's offset (ties that only the input
+    index breaks), then the array is shuffled."""
+    spans = [dict(s) for s in spans]
+    for i, s in enumerate(spans):
+        if s["kind"] == "media" and len(spans) > 1:
+            s["offset"] = spans[i - 1 if i else 1]["offset"]
+    return [spans[j] for j in rng.permutation(len(spans))]
+
+
+def test_chunk_cut_keeps_reading_order(spark, tmp_path):
+    """Salted output equals unsalted output and the oracle at any chunk count;
+    a negative threshold also salts a zero-span doc, which must survive."""
+    rng = np.random.default_rng(5)
+    docs = C.generate_corpus(30, seed=5, mega_doc_every=10, mega_doc_pages=40)
+    docs["spans"] = [_scrambled(s, rng) for s in docs["spans"]]
+    docs = pd.concat([docs, pd.DataFrame({"doc_id": ["empty"], "spans": [[]]})],
+                     ignore_index=True)
+    src = spark.read.parquet(make_input(spark, tmp_path, docs, name="scrambled"))
+    unsalted = collect_spans(extract_corpus(src, salt_threshold=10**9))
+    oracle = {r.doc_id: rows_to_tuples(oracle_extract_doc(r.doc_id, r.spans))
+              for r in docs.itertuples()}
+    assert unsalted == oracle
+    for threshold, parallelism in [(0, 1), (0, 3), (0, 7), (6, None), (-1, 3)]:
+        salted = extract_corpus(src, salt_threshold=threshold,
+                                salted_parallelism=parallelism)
+        assert collect_spans(salted) == unsalted, (threshold, parallelism)
+
+
+_TWO_SESSIONS = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+from pdf_extract_sys_spark import corpus as C
+from pdf_extract_sys_spark.pipeline import extract_corpus
+
+docs = C.generate_corpus(12, seed=3, mega_doc_every=4, mega_doc_pages=12)
+for _ in range(2):
+    spark = (SparkSession.builder.master("local[2]")
+             .config("spark.ui.enabled", "false")
+             .config("spark.sql.shuffle.partitions", "4")
+             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+             .getOrCreate())
+    assert extract_corpus(C.corpus_to_spark(spark, docs), salt_threshold=8).count() == 12
+    spark.stop()
+"""
+
+
+def test_salted_branch_rebinds_to_a_new_session():
+    """A second SparkContext in the same process runs the salted classifier
+    against its own accumulator, not the first context's."""
+    root = str(Path(__file__).resolve().parents[1])
+    proc = subprocess.run([sys.executable, "-c", _TWO_SESSIONS, root], cwd=root,
+                          capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "Failed to update accumulator" not in proc.stderr
